@@ -31,6 +31,7 @@ available and bit-identical.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 
 from ..functions.text import FP_MOD, shingle_hash, word_shingles
 from ..functions.vectors import cosine_sim_q, quantize_vec
@@ -2339,52 +2340,50 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-def embedding_pairs(
-    df: DataFrame, id_col: str, vec_col: str, tau: float, n_blocks: int = 16
-) -> DataFrame:
-    """Exact embedding-cosine near-dup pairs (id_a < id_b, cosine >= tau).
+#: Block-pair cosine kernel layout (``_block_cosine_pairs``): rows split
+#: into ``_COS_BLOCKS`` id blocks (B(B+1)/2 = 136 block-pair tasks), and
+#: each task's matmul is tiled so its peak memory is at most
+#: ``_COS_TILE_A x _COS_TILE_B`` doubles, whatever the block size.
+_COS_BLOCKS = 16
+_COS_TILE_A = 1024
+_COS_TILE_B = 4096
 
-    Brute-force all-pairs as a DISTRIBUTED block-matrix join — no driver
-    collect, no corpus broadcast: rows are assigned to ``n_blocks`` blocks
-    by id, each block is packed into one row (ids + quantized vectors), and
-    the B*(B+1)/2 unordered block pairs are formed by a tiny nested-loop
-    join over B rows per side. Each block-pair task then does ONE int64
-    NumPy matmul (exact integer dot products) instead of interpreted array
-    folds. Every unordered row pair lands in exactly one block pair, so the
-    result is complete and duplicate-free.
 
-    Exactness/parity: integer dot products are exact; cosine is the same
-    deterministic double expression (dot / sqrt(na) / sqrt(nb)) as the SQL
-    oracle; rounding uses floor(x*1e6 + 0.5) which is precisely DuckDB's
-    round() for positive doubles.
+def _block_cosine_pairs(q: DataFrame, tau: float) -> DataFrame:
+    """Exact all-pairs cosine over ``(__id integral, __q array<long>)`` rows:
+    (id_a < id_b, raw double cosine >= tau), ids in ``__id``'s type.
 
-    Scale: pick ``n_blocks`` so one block (~N/B rows x dim x 8 bytes) fits
-    comfortably in a task (e.g. B ~ N*dim*8 / 256 MB); work is B^2/2 matmul
-    tasks — the unavoidable all-pairs FLOPs, now spread across the cluster
-    instead of bounded by driver RAM. Inside each block pair the cosine
-    matrix is computed in FIXED-ROW TILES (``tile`` rows of A at a time),
-    so peak task memory is tile x |block| doubles — independent of how big
-    blocks get — never the full |block|^2 matrix. For sub-quadratic
-    candidate generation use operators/similarity.py (IVF / LSH blocking).
-    """
+    Brute force as a DISTRIBUTED block-matrix join — no driver collect, no
+    corpus broadcast: rows go to ``pmod(__id, _COS_BLOCKS)`` blocks, each
+    block packs into one row, and the B(B+1)/2 unordered block pairs come
+    from a nested-loop join over B rows per side. Each block-pair task does
+    tiled int64 NumPy matmuls instead of interpreted array folds. Every
+    unordered row pair lands in exactly one block pair, so the result is
+    complete and duplicate-free; rows sharing an id never pair.
+
+    Exactness (parity with the posting join and the SQL oracles): int64
+    dot products and sums of squares are exact in any order; the cosine is
+    ``dot / sqrt(n_lo) / sqrt(n_hi)`` with ``lo`` the SMALLER id — the same
+    correctly rounded IEEE operations in the same order as
+    ``a.dot / sqrt(a.n) / sqrt(b.n)`` over ``a.id < b.id``, so the
+    ``>= tau`` test sees identical doubles. Zero-norm rows give NaN, which
+    the mask drops exactly as the oracles' ``na > 0 AND nb > 0`` guard.
+    Rounding is left to the caller."""
     from collections.abc import Iterator
 
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    q = _spread(df).select(F.col(id_col).alias("__id"), quantize_vec(vec_col).alias("__q"))
+    id_type = q.schema["__id"].dataType
     blocks = (
-        q.withColumn("__b", F.pmod(F.col("__id"), F.lit(n_blocks)))
+        q.withColumn("__b", F.pmod(F.col("__id"), F.lit(_COS_BLOCKS)))
         .groupBy("__b")
         .agg(F.collect_list(F.struct("__id", "__q")).alias("__rows"))
     )
     a = blocks.select(F.col("__b").alias("__ba"), F.col("__rows").alias("__ra"))
     b = blocks.select(F.col("__b").alias("__bb"), F.col("__rows").alias("__rb"))
-    # unordered block pairs (ba <= bb): B rows x B rows nested-loop join —
-    # trivially small; the heavy work happens inside the per-pair kernel
     joined = a.join(b, F.col("__ba") <= F.col("__bb")).repartition(
-        max(df.sparkSession.sparkContext.defaultParallelism, n_blocks)
+        max(q.sparkSession.sparkContext.defaultParallelism, _COS_BLOCKS)
     )
-
     out_schema = StructType(
         [
             StructField("id_a", LongType()),
@@ -2392,143 +2391,17 @@ def embedding_pairs(
             StructField("cosine", DoubleType()),
         ]
     )
+    ta, tb = _COS_TILE_A, _COS_TILE_B
 
     def _unpack(cell):
         import numpy as _np
 
         ids = _np.array([r["__id"] for r in cell], dtype=_np.int64)
         mat = _np.stack([_np.asarray(r["__q"], dtype=_np.int64) for r in cell])
+        # sqrt of the int64 norm cast to double, as in the oracles
         return ids, mat, _np.sqrt((mat * mat).sum(axis=1).astype(_np.float64))
 
-    def kernel(batches: Iterator, tile: int = 4096) -> Iterator:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            for ba, bb, ra, rb in zip(pdf["__ba"], pdf["__bb"], pdf["__ra"], pdf["__rb"]):
-                if len(ra) == 0 or len(rb) == 0:
-                    continue
-                a_ids, a_mat, a_sq = _unpack(ra)
-                b_ids, b_mat, b_sq = _unpack(rb)
-                # tile the A side: peak memory tile x |B| doubles, not |A| x |B|
-                for lo in range(0, len(a_ids), tile):
-                    hi = lo + tile
-                    cos = (
-                        (a_mat[lo:hi] @ b_mat.T).astype(_np.float64)
-                        / a_sq[lo:hi, None]
-                        / b_sq[None, :]
-                    )
-                    if ba == bb:
-                        # diagonal block: order within the block, skip self-pairs
-                        mask = (cos >= tau) & (a_ids[lo:hi, None] < b_ids[None, :])
-                    else:
-                        # off-diagonal: ids interleave across blocks — emit every
-                        # qualifying pair once, ordered per-pair below
-                        mask = cos >= tau
-                    ii, jj = _np.nonzero(mask)
-                    if len(ii) == 0:
-                        continue
-                    ida, idb = a_ids[lo:hi][ii], b_ids[jj]
-                    c = cos[ii, jj]
-                    yield _pd.DataFrame(
-                        {
-                            "id_a": _np.minimum(ida, idb),
-                            "id_b": _np.maximum(ida, idb),
-                            "cosine": _np.floor(c * 1e6 + 0.5) / 1e6,
-                        }
-                    )
-
-    return joined.mapInPandas(kernel, out_schema)
-
-
-#: Dense-gate bounds for ``sparse_cosine_pairs`` (see its probe): the
-#: vocabulary must fit a per-document array column, and the whole dense
-#: matrix must spread across block tasks without oversized rows
-#: (2^26 cells x 8 B = 512 MB total; <= 33 MB per block at 16 blocks).
-_DENSE_MAX_VOCAB = 1024
-_DENSE_MAX_CELLS = 1 << 26
-
-
-def _dense_int_cosine_pairs(
-    wt: DataFrame, vocab: list[int], tau: float, n_blocks: int = 16
-) -> DataFrame:
-    """All-pairs cosine over a SMALL-VOCABULARY exact-integer TF-IDF index
-    (``wt``: __id, __w, __wgt) as a distributed block matmul — the dense
-    dual of the inverted-index posting join, same shape as
-    ``embedding_pairs``: documents become dense int64 weight vectors over
-    the sorted ``vocab`` slots, blocks of ~N/B docs pack into single rows,
-    and each of the B(B+1)/2 unordered block pairs computes one exact
-    int64 NumPy matmul instead of shuffling Σ df(t)² co-posting rows.
-
-    Exactness/parity with the posting branch (and the SQL oracle): the
-    dot product is the same int64 sum in a different order; norms are the
-    same Σ wgt² int64; the cosine is the same double expression
-    (cast-to-double dot / sqrt(double na) / sqrt(double nb) — correctly
-    rounded IEEE ops in the same order), the ``>= tau`` comparison is on
-    identical doubles, and rounding is left to the CALLER's ``F.round``
-    so both branches share the one rounding expression. Zero-norm
-    documents produce NaN cosines, excluded by the mask exactly as the
-    posting branch's ``WHEN na > 0 AND nb > 0`` guard excludes them.
-    Both matmul sides are tiled, so peak task memory is tile_a x tile_b
-    doubles regardless of block size."""
-    from collections.abc import Iterator
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    slot_args = []
-    for i, w in enumerate(vocab):
-        slot_args += [F.lit(w), F.lit(i)]
-    slot = F.create_map(*slot_args)
-    nv = len(vocab)
-    vecs = (
-        wt.select(
-            "__id", slot[F.col("__w")].alias("__slot"), "__wgt"
-        )
-        .groupBy("__id")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("__slot", "__wgt"))
-            ).alias("__m")
-        )
-        .select(
-            "__id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nv - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("__m"), i), F.lit(0).cast("long")
-                ),
-            ).alias("__q"),
-        )
-    )
-    blocks = (
-        vecs.withColumn("__b", F.pmod(F.col("__id"), F.lit(n_blocks)))
-        .groupBy("__b")
-        .agg(F.collect_list(F.struct("__id", "__q")).alias("__rows"))
-    )
-    a = blocks.select(F.col("__b").alias("__ba"), F.col("__rows").alias("__ra"))
-    b = blocks.select(F.col("__b").alias("__bb"), F.col("__rows").alias("__rb"))
-    joined = a.join(b, F.col("__ba") <= F.col("__bb")).repartition(
-        max(wt.sparkSession.sparkContext.defaultParallelism, n_blocks)
-    )
-
-    out_schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def _unpack(cell):
-        import numpy as _np
-
-        ids = _np.array([r["__id"] for r in cell], dtype=_np.int64)
-        mat = _np.stack([_np.asarray(r["__q"], dtype=_np.int64) for r in cell])
-        # sqrt over the int64 norm cast to double — identical to the SQL
-        # expression sqrt(CAST(sum(wgt*wgt) AS DOUBLE))
-        return ids, mat, _np.sqrt((mat * mat).sum(axis=1).astype(_np.float64))
-
-    def kernel(batches: Iterator, ta: int = 1024, tb: int = 4096) -> Iterator:
+    def kernel(batches: Iterator) -> Iterator:
         import numpy as _np
         import pandas as _pd
 
@@ -2541,26 +2414,23 @@ def _dense_int_cosine_pairs(
                 a_ids, a_mat, a_sq = _unpack(ra)
                 b_ids, b_mat, b_sq = _unpack(rb)
                 for lo in range(0, len(a_ids), ta):
-                    hi = lo + ta
+                    sa = slice(lo, lo + ta)
+                    ia, na = a_ids[sa], a_sq[sa, None]
                     for blo in range(0, len(b_ids), tb):
-                        bhi = blo + tb
+                        sb = slice(blo, blo + tb)
+                        ib, nb = b_ids[sb], b_sq[None, sb]
+                        dot = (a_mat[sa] @ b_mat[sb].T).astype(_np.float64)
+                        # divide by the smaller id's norm first
+                        lt = ia[:, None] < ib[None, :]
                         with _np.errstate(divide="ignore", invalid="ignore"):
-                            cos = (
-                                (a_mat[lo:hi] @ b_mat[blo:bhi].T).astype(
-                                    _np.float64
-                                )
-                                / a_sq[lo:hi, None]
-                                / b_sq[None, blo:bhi]
-                            )
-                        # NaN (zero-norm side) compares False — the same
-                        # pairs the posting branch's na/nb > 0 guard drops
+                            cos = dot / _np.where(lt, na, nb) / _np.where(lt, nb, na)
                         mask = cos >= tau
                         if ba == bb:
-                            mask &= a_ids[lo:hi, None] < b_ids[None, blo:bhi]
+                            mask &= lt
                         ii, jj = _np.nonzero(mask)
                         if len(ii) == 0:
                             continue
-                        ida, idb = a_ids[lo:hi][ii], b_ids[blo:bhi][jj]
+                        ida, idb = ia[ii], ib[jj]
                         yield _pd.DataFrame(
                             {
                                 "id_a": _np.minimum(ida, idb),
@@ -2569,7 +2439,42 @@ def _dense_int_cosine_pairs(
                             }
                         )
 
-    return joined.mapInPandas(kernel, out_schema)
+    return joined.mapInPandas(kernel, out_schema).select(
+        F.col("id_a").cast(id_type).alias("id_a"),
+        F.col("id_b").cast(id_type).alias("id_b"),
+        "cosine",
+    )
+
+
+def embedding_pairs(df: DataFrame, id_col: str, vec_col: str, tau: float) -> DataFrame:
+    """Exact embedding-cosine near-dup pairs (id_a < id_b, cosine >= tau)
+    over an integral id column (``TypeError`` otherwise).
+
+    Vectors are quantized to exact integers (``quantize_vec``), paired by
+    the block-pair matmul kernel ``_block_cosine_pairs`` (distribution,
+    memory bound and exactness argument there), and the cosine is rounded
+    with floor(x*1e6 + 0.5)/1e6 — precisely DuckDB's round() for positive
+    doubles. Work is the unavoidable all-pairs FLOPs; for sub-quadratic
+    candidate generation use operators/similarity.py (IVF / LSH blocking).
+    """
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"embedding_pairs: id column {id_col!r} must be integral "
+            f"(tinyint/smallint/int/bigint), got {id_type.simpleString()}"
+        )
+    q = _spread(df).select(F.col(id_col).alias("__id"), quantize_vec(vec_col).alias("__q"))
+    return _block_cosine_pairs(q, tau).withColumn(
+        "cosine", F.floor(F.col("cosine") * 1e6 + 0.5) / 1e6
+    )
+
+
+#: Dense-gate bounds for ``sparse_cosine_pairs`` (see its probe): the
+#: vocabulary must fit a per-document array column, and the whole dense
+#: matrix must spread across block tasks without oversized rows
+#: (2^26 cells x 8 B = 512 MB total; <= 33 MB per block at 16 blocks).
+_DENSE_MAX_VOCAB = 1024
+_DENSE_MAX_CELLS = 1 << 26
 
 
 def sparse_cosine_pairs(
@@ -2602,7 +2507,10 @@ def sparse_cosine_pairs(
     deployments add prefix filtering on top. On the synthetic word-soup
     tables every word is ubiquitous, so the gate query leaves
     max_df_frac=1 and restricts the corpus instead — the operator's
-    pruning path is unit-tested separately."""
+    pruning path is unit-tested separately. Small-vocabulary corpora with
+    integral ids take the dense block-pair matmul instead (see the gate
+    below and ``_block_cosine_pairs`` for its exactness argument); both
+    paths return the same rows, with ids in the id column's type."""
     from ..functions.text import word_hashes
 
     toks = _spread(df).select(
@@ -2658,35 +2566,63 @@ def sparse_cosine_pairs(
         ),
     )
     wt = wt.cache()
-    # Round 11 DENSE GATE (guide §1.2/§8 — change the algorithm, and decide
-    # with small rows): when the surviving vocabulary is small, the TF-IDF
+    # DENSE GATE (guide §1.2/§8 — change the algorithm, and decide with
+    # small rows): when the surviving vocabulary is small, the TF-IDF
     # matrix is effectively DENSE and the inverted-index self-join is the
     # wrong algorithm — it materializes and shuffles one row per co-posting
     # (Σ df(t)² — 8.9M rows ≈ 71 MB shuffled on the packaged gate corpus,
     # 4.6-5.5 s of the query's wall at 32 cores, profiled round 11) to
-    # compute what is one small exact int64 matmul. The probe (one narrow
-    # aggregate over the cached index) takes the dense path when the
-    # vocabulary fits a per-row array (<= {_DENSE_MAX_VOCAB}) and the
-    # matrix fits comfortably across block tasks (<= 2^26 cells); real
-    # corpora (Heaps-law vocabularies) keep the posting path, where
-    # ``max_df_frac`` remains the scale lever. Exactness: same int64 dot
-    # products in a different order, same double cosine expression, same
-    # tau comparison — see ``_dense_int_cosine_pairs``.
+    # compute what is one small exact int64 matmul. One narrow aggregate
+    # over the cached index (it also materializes the cache) gives the
+    # vocabulary and corpus sizes for the gate and the id range for the
+    # posting path's packed key. The dense path needs integral ids (the
+    # kernel blocks and packs them as int64), a vocabulary that fits a
+    # per-row array (<= _DENSE_MAX_VOCAB) and a matrix that spreads across
+    # block tasks (<= _DENSE_MAX_CELLS); real corpora (Heaps-law
+    # vocabularies) keep the posting path, where ``max_df_frac`` remains
+    # the scale lever.
     # tau > 0 is part of the gate: at tau <= 0 the posting join's output
     # includes zero-dot pairs that share only a zero-weight (idf = 0) term
     # — information a dense weight vector cannot represent (the zero slot
     # is indistinguishable from term absence), and an all-pairs result at
     # tau <= 0 is output-quadratic anyway. For tau > 0 every emitted pair
     # has dot > 0, where both algorithms agree exactly (unit-pinned).
+    id_type = wt.schema["__id"].dataType
+    integral = isinstance(id_type, IntegralType)
     probe = wt.agg(
-        F.count_distinct("__w").alias("nw"), F.count_distinct("__id").alias("nd")
+        F.count_distinct("__w").alias("nw"),
+        F.count_distinct("__id").alias("nd"),
+        F.min("__id").alias("mn"),
+        F.max("__id").alias("mx"),
     ).collect()[0]
     nw, nd = probe["nw"] or 0, probe["nd"] or 0
-    if tau > 0 and 0 < nw <= _DENSE_MAX_VOCAB and nw * nd <= _DENSE_MAX_CELLS:
+    if (
+        integral and tau > 0
+        and 0 < nw <= _DENSE_MAX_VOCAB and nw * nd <= _DENSE_MAX_CELLS
+    ):
+        # the one extra collect: the vocabulary, <= _DENSE_MAX_VOCAB rows
         vocab = sorted(r["__w"] for r in wt.select("__w").distinct().collect())
-        dense = _dense_int_cosine_pairs(wt, vocab, tau)
-        return dense.select(
-            "id_a", "id_b", F.round("cosine", 6).alias("cosine")
+        slot_args = []
+        for i, w in enumerate(vocab):
+            slot_args += [F.lit(w), F.lit(i)]
+        slot = F.create_map(*slot_args)
+        q = (
+            wt.groupBy("__id")
+            .agg(
+                F.map_from_entries(
+                    F.collect_list(F.struct(slot[F.col("__w")].alias("__slot"), "__wgt"))
+                ).alias("__m")
+            )
+            .select(
+                "__id",
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(len(vocab) - 1)),
+                    lambda i: F.coalesce(F.element_at("__m", i), F.lit(0).cast("long")),
+                ).alias("__q"),
+            )
+        )
+        return _block_cosine_pairs(q, tau).withColumn(
+            "cosine", F.round("cosine", 6)
         )
     nrm = wt.groupBy("__id").agg(F.sum(F.col("__wgt") * F.col("__wgt")).alias("__nn"))
     a, b = wt.alias("a"), wt.alias("b")
@@ -2698,17 +2634,11 @@ def sparse_cosine_pairs(
     # jaccard/_cooccurrence pipeline). Packing (ida, idb) into ONE int64
     # halves the aggregation key width exactly as in _cooccurrence
     # (measured there 49.4s -> 17.1s at the 100x stress; here 3.75s ->
-    # 2.88s same-session at the gate slice). The range probe reads
-    # min/max of the SOURCE id column (one pruned scan — not the cached
-    # index: an eager probe there would materialize the cache in its own
-    # job, and the main plan then reprints the cached subtree's exchanges
-    # per consuming branch, tripping the plan-budget lint on phantom
-    # counts). wt's ids are a subset of the source ids, so the bound is
-    # valid; ids outside [0, 2^31) fall back to the unpacked grouping.
-    stats = df.agg(
-        F.min(F.col(id_col)).alias("mn"), F.max(F.col(id_col)).alias("mx")
-    ).collect()[0]
-    if stats["mn"] is not None and stats["mn"] >= 0 and stats["mx"] < 2**31:
+    # 2.88s same-session at the gate slice). The id range comes from the
+    # gate aggregate above; ids outside [0, 2^31), or non-integral ids,
+    # take the unpacked grouping.
+    mn, mx = probe["mn"], probe["mx"]
+    if integral and mn is not None and mn >= 0 and mx < 2**31:
         dot = (
             joined.select(
                 (
@@ -2746,8 +2676,8 @@ def sparse_cosine_pairs(
         .filter(F.col("cosine") >= tau)
     )
     return cos.select(
-        F.col("__ida").alias("id_a"),
-        F.col("__idb").alias("id_b"),
+        F.col("__ida").cast(id_type).alias("id_a"),
+        F.col("__idb").cast(id_type).alias("id_b"),
         F.round("cosine", 6).alias("cosine"),
     )
 

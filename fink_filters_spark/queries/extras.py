@@ -20,19 +20,45 @@ _GOLDEN_DIR = os.path.join(
 )
 
 
+def tde_real_model_fp() -> str:
+    """Fingerprint of the model ``q_ts_tde_score_real`` scores with:
+    ``ubj:`` + sha256 of the reference's ``model_broad.ubj`` bytes when it
+    is mounted, else ``demo:`` + sha256 of the demo model dict (canonical
+    JSON). Its golden rows are keyed by it (``model_fp`` column)."""
+    import hashlib
+    import json
+
+    from ..operators.ml import REFERENCE_TDE_MODEL_DIR
+
+    path = os.path.join(REFERENCE_TDE_MODEL_DIR, "model_broad.ubj")
+    if os.path.isfile(path):
+        with open(path, "rb") as f:
+            return "ubj:" + hashlib.sha256(f.read()).hexdigest()[:16]
+    doc = json.dumps(_DEMO_TDE_MODEL, sort_keys=True).encode()
+    return "demo:" + hashlib.sha256(doc).hexdigest()[:16]
+
+
+#: Golden queries whose rows also depend on which model loaded: their
+#: goldens carry a ``model_fp`` key column next to ``sf_tag``, and every
+#: comparison selects the loaded model's rows.
+GOLDEN_MODEL_FP = {"ts_tde_score_real": tde_real_model_fp}
+
+
 def _golden_oracle(name: str) -> str | None:
     """Pinned-golden oracle for queries with no SQL dual (iterative fits,
     BPE training): DuckDB reads the committed golden parquet
     (tools/gen_goldens.py — engine outputs, double-run-deterministic) and
-    selects the current scale factor's rows by the events row count. Falls
+    selects the current scale factor's rows by the events row count, and
+    the loaded model's rows by ``model_fp`` where the query has one. Falls
     back to rows-only (None) on a checkout without generated goldens."""
     path = os.path.join(_GOLDEN_DIR, f"{name}.parquet")
     if not os.path.exists(path):
         return None
-    return (
-        f"SELECT * EXCLUDE (sf_tag) FROM read_parquet('{path}') "
-        "WHERE sf_tag = (SELECT count(*) FROM events)"
-    )
+    sql = f"FROM read_parquet('{path}') WHERE sf_tag = (SELECT count(*) FROM events)"
+    if name in GOLDEN_MODEL_FP:
+        fp = GOLDEN_MODEL_FP[name]()
+        return f"SELECT * EXCLUDE (sf_tag, model_fp) {sql} AND model_fp = '{fp}'"
+    return f"SELECT * EXCLUDE (sf_tag) {sql}"
 
 
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -268,7 +294,8 @@ def q_ts_tde_score_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     model itself is the reference's shipped artifact, parsed and scored by
     the numpy UBJSON reader. Falls back to the demo model when the
     reference snapshot is not mounted (feature shape unchanged, so the
-    query runs everywhere). Iterative fit + MC: rows-only check; the
+    query runs everywhere); ``tde_real_model_fp`` names the model that
+    loaded, and the pinned golden keeps separate rows per model. The
     model's numeric parity is pinned by golden tests on a fixed feature
     matrix (tests/test_reference_fixtures.py)."""
     from ..operators.fit import rainbow_mc_score_per_key

@@ -819,6 +819,74 @@ def test_sparse_cosine_dense_gate_matches_posting_path(spark):
     assert any((a, b) == (1, 3) for a, b, _ in at_zero)
 
 
+def test_block_cosine_divides_in_id_order(spark):
+    """The block-pair kernel divides by the SMALLER id's norm first, the
+    order of the posting join and the SQL oracles. Ids 2 and 17 fall in
+    blocks 2 and 1 (pmod 16), so block pair (1, 2) puts the LARGER id on
+    the A side. For these vectors dot/s17/s2 is one ulp below dot/s2/s17
+    and tau is the id-order cosine: block order would drop the pair."""
+    import math
+
+    import fink_filters_spark.operators.dedup as d
+
+    def id_order_tau(dot, n2, n17):
+        s2, s17 = math.sqrt(n2), math.sqrt(n17)
+        assert dot / s17 / s2 < dot / s2 / s17  # the premise
+        return dot / s2 / s17
+
+    v2, v17 = [0.0, 0.25, 1.125], [0.5, 0.375, 0.125]
+    q2, q17 = (np.round(np.array(v) * 1e6).astype(np.int64) for v in (v2, v17))
+    tau = id_order_tau(float(q2 @ q17), float(q2 @ q2), float(q17 @ q17))
+    emb = spark.createDataFrame([(17, v17), (2, v2)], "vec_id long, embedding array<double>")
+    got = [(r.id_a, r.id_b) for r in d.embedding_pairs(emb, "vec_id", "embedding", tau).collect()]
+    assert got == [(2, 17)]
+
+    # TF-IDF weights tf * round(ln(3/df) * 1000) of the three docs below:
+    # doc 2 = {c: 1215, d: 405, e: 405, f: 1099}, doc 17 = {a: 3297, d: 405}
+    docs = spark.createDataFrame(
+        [(2, "f c e c d c"), (17, "a d a a"), (3, "c e")], "doc_id long, text string"
+    )
+    tau = id_order_tau(405.0 * 405, 1215**2 + 2 * 405**2 + 1099**2, 3297**2 + 405**2)
+    spark.catalog.clearCache()
+    got = [(r.id_a, r.id_b) for r in d.sparse_cosine_pairs(docs, "doc_id", "text", tau).collect()]
+    assert (2, 17) in got  # 6-word vocabulary x 3 docs: the dense branch
+
+
+def test_sparse_cosine_driver_jobs_per_branch(spark):
+    """Pins the Spark jobs ``sparse_cosine_pairs`` runs before it returns
+    (counted by job group) on a fixed corpus: the posting branch pays only
+    the gate aggregate, which also materializes the cached index and
+    reports the id range; the dense branch adds one vocabulary collect."""
+    import fink_filters_spark.operators.dedup as d
+
+    rows = [
+        (1, "red green blue cyan common"),
+        (2, "cyan blue green red common"),
+        (3, "zeta eta theta iota common"),
+        (4, "red green blue iota common"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sc = spark.sparkContext
+
+    def jobs(group):
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, group)
+        try:
+            d.sparse_cosine_pairs(df, "doc_id", "text", tau=0.1)
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    dense = jobs("sparse-cosine-dense")
+    old = d._DENSE_MAX_VOCAB
+    try:
+        d._DENSE_MAX_VOCAB = 0  # force the posting join
+        posting = jobs("sparse-cosine-posting")
+    finally:
+        d._DENSE_MAX_VOCAB = old
+    assert (dense, posting) == (13, 12)
+
+
 def test_sparse_cosine_df_pruning_and_reordering_robustness(spark):
     """max_df_frac drops ubiquitous terms from the vectors (changing
     cosines exactly as recomputing without those terms would), and word

@@ -14,7 +14,8 @@ invalidate them silently:
   pytest stayed green while the full oracle sweep went 4-red.
 
 This test closes that hole: it executes each golden query at sf0.001 and
-requires BIT-IDENTICAL agreement with the committed golden rows. When it
+requires BIT-IDENTICAL agreement with the committed golden rows — for a
+query in ``GOLDEN_MODEL_FP``, the rows of the model that loaded. When it
 fails, inspect the diff it prints; if the change is intended (new testdata
 build or deliberate kernel change), regenerate with
 
@@ -50,6 +51,7 @@ def _sf_tag(spark) -> int:
 @pytest.mark.parametrize("name", sorted(GOLDEN_QUERIES))
 def test_golden_matches_current_engine_and_testdata(spark, name):
     import __spark_entry__ as entry
+    from fink_filters_spark.queries.extras import GOLDEN_MODEL_FP
 
     fresh = (
         entry.queries()[name](spark, SF_DIR)
@@ -58,12 +60,15 @@ def test_golden_matches_current_engine_and_testdata(spark, name):
         .reset_index(drop=True)
     )
     golden = pd.read_parquet(os.path.join(GOLDEN_DIR, f"{name}.parquet"))
-    golden = (
-        golden[golden["sf_tag"] == _sf_tag(spark)]
-        .drop(columns=["sf_tag"])
-        .sort_values(GOLDEN_QUERIES[name])
-        .reset_index(drop=True)
-    )
+    golden = golden[golden["sf_tag"] == _sf_tag(spark)].drop(columns=["sf_tag"])
+    if name in GOLDEN_MODEL_FP:
+        fp = GOLDEN_MODEL_FP[name]()
+        golden = golden[golden["model_fp"] == fp].drop(columns=["model_fp"])
+        assert len(golden), (
+            f"{name}: no golden rows for model {fp} — run "
+            "`python tools/gen_goldens.py` with it loaded"
+        )
+    golden = golden.sort_values(GOLDEN_QUERIES[name]).reset_index(drop=True)
     assert list(fresh.columns) == list(golden.columns), (
         f"{name}: schema drift vs golden — regenerate via tools/gen_goldens.py"
     )

@@ -830,3 +830,66 @@ def test_record_batch_roundtrip_property(records, base_offset):
     got = decode_record_batches(enc)
     want = [(base_offset + i, k, v, ts) for i, (k, v, ts) in enumerate(records)]
     assert got == want
+
+
+_COS_WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    id_type=st.sampled_from(["int", "bigint", "string"]),
+    # small ranges make duplicated ids common; the shifted ones sit below
+    # zero and at/above 2^31 (outside the posting path's packed-key range)
+    ids=st.lists(
+        st.one_of(
+            st.integers(-40, 40),
+            st.integers(2**31, 2**31 + 40),
+            st.integers(-(2**40), -(2**40) + 40),
+        ),
+        min_size=2,
+        max_size=10,
+    ),
+    docs=st.lists(
+        st.lists(st.sampled_from(_COS_WORDS), min_size=1, max_size=5),
+        min_size=10,
+        max_size=10,
+    ),
+    tau=st.sampled_from([0.05, 0.5, 0.9]),
+)
+def test_sparse_cosine_branches_agree_on_any_ids(spark, id_type, ids, docs, tau):
+    """The dense block-matmul branch and the posting join return the same
+    rows and the same schema (ids in the input's type) for negative,
+    >= 2^31, duplicated, int, long and string ids; string ids take the
+    posting join on both runs, and embedding_pairs rejects them."""
+    import fink_filters_spark.operators.dedup as d
+
+    if id_type == "int":  # wrap into int32: the shifted values turn negative
+        ids = [(i + 2**31) % 2**32 - 2**31 for i in ids]
+    elif id_type == "string":
+        ids = [str(i) for i in ids]
+    rows = [(i, " ".join(ws)) for i, ws in zip(ids, docs)]
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+    def run():
+        spark.catalog.clearCache()
+        out = d.sparse_cosine_pairs(df, "doc_id", "text", tau=tau)
+        return out.schema, sorted(out.collect())
+
+    dense = run()
+    old = d._DENSE_MAX_VOCAB
+    try:
+        d._DENSE_MAX_VOCAB = 0  # force the posting join
+        posting = run()
+    finally:
+        d._DENSE_MAX_VOCAB = old
+    assert dense == posting
+    assert dense[0]["id_a"].dataType == df.schema["doc_id"].dataType
+
+    emb = df.withColumn("embedding", F.array(F.lit(1.0)))
+    if id_type == "string":
+        with pytest.raises(TypeError):
+            d.embedding_pairs(emb, "doc_id", "embedding", tau)
+    else:
+        out = d.embedding_pairs(emb, "doc_id", "embedding", tau)
+        assert out.schema["id_b"].dataType == df.schema["doc_id"].dataType

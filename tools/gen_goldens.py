@@ -11,6 +11,11 @@ of the sf's events table. The oracle SQL then selects the matching sf's
 golden rows with ``WHERE sf_tag = (SELECT count(*) FROM events)`` — the
 same oracle string works at every scale factor.
 
+Queries in ``queries/extras.GOLDEN_MODEL_FP`` also depend on which model
+loaded (the reference's real .ubj or the demo fallback): their goldens
+carry a ``model_fp`` key column, each run writes only the loaded model's
+rows, and the rows of every other model are kept as committed.
+
 These goldens pin the ENGINE'S OWN numerics (drift detection): a change to
 the fit kernels that moves any output bit turns the gate row red instead of
 passing silently. Run after an intentional numerics change:
@@ -50,7 +55,7 @@ _PA_TYPES = {
 }
 
 
-def _arrow_schema(sdf):
+def _arrow_schema(sdf, keyed: bool):
     import pyarrow as pa
 
     fields = []
@@ -63,6 +68,8 @@ def _arrow_schema(sdf):
             )
         fields.append(pa.field(f.name, getattr(pa, t)()))
     fields.append(pa.field("sf_tag", pa.int64()))
+    if keyed:
+        fields.append(pa.field("model_fp", pa.string()))
     return pa.schema(fields)
 
 
@@ -71,6 +78,7 @@ def main() -> int:
     import pyarrow.parquet as pq
 
     import __spark_entry__ as entrymod
+    from fink_filters_spark.queries.extras import GOLDEN_MODEL_FP
     from fink_filters_spark.session import get_session
     from tools.check_oracle import value_hash
 
@@ -88,11 +96,12 @@ def main() -> int:
         fn = qs[name]
         batches = []
         schema = None
+        fp = GOLDEN_MODEL_FP[name]() if name in GOLDEN_MODEL_FP else None
         for sf_dir in sf_dirs:
             tag = spark.read.parquet(f"{sf_dir}/events.parquet").count()
             sdf = fn(spark, sf_dir)
             if schema is None:
-                schema = _arrow_schema(sdf)
+                schema = _arrow_schema(sdf, fp is not None)
             rows = [r.asDict() for r in sdf.collect()]
             rerun = [r.asDict() for r in fn(spark, sf_dir).collect()]
             h1, h2 = value_hash(rows), value_hash(rerun)
@@ -102,12 +111,18 @@ def main() -> int:
                 return 1
             for r in rows:
                 r["sf_tag"] = tag
+                if fp is not None:
+                    r["model_fp"] = fp
             batches.append(rows)
             print(f"  {name} @ {os.path.basename(sf_dir)}: "
-                  f"{len(rows)} rows (tag={tag})")
+                  f"{len(rows)} rows (tag={tag}{', model=' + fp if fp else ''})")
+        path = os.path.join(out_dir, f"{name}.parquet")
+        if fp is not None and os.path.exists(path):
+            # keep the committed rows of every other model
+            other = [r for r in pq.read_table(path).to_pylist() if r["model_fp"] != fp]
+            batches.append(other)
         table = pa.Table.from_pylist([r for b in batches for r in b],
                                      schema=schema)
-        path = os.path.join(out_dir, f"{name}.parquet")
         pq.write_table(table, path)
         print(f"WROTE {path} ({table.num_rows} rows)")
     return 0
